@@ -26,25 +26,30 @@ from tilemaker_spark.session import get_spark  # noqa: E402
 
 def main() -> int:
     args = sys.argv[1:]
-    # A path-looking first arg MUST be a real directory — a typoed
-    # sf_dir must not silently fall back and be reinterpreted as a
-    # pair name (which would only surface as a KeyError post-startup).
-    if args and (os.sep in args[0] or args[0].startswith(".")):
+    q = entrymod.queries()
+    o = entrymod.oracle_sql()
+    pairs = set(q) & set(o)
+    # args[0] is sf_dir when it names a directory (bare relative names
+    # like `sf0.1` included) and not a pair. A path-looking first arg
+    # MUST be a real directory — a typoed sf_dir must not silently fall
+    # back and be reinterpreted as a pair name.
+    if args and args[0] not in pairs and (
+            os.path.isdir(args[0]) or os.sep in args[0] or args[0].startswith(".")):
         if not os.path.isdir(args[0]):
             print(f"error: sf_dir {args[0]!r} is not a directory")
             return 2
         sf_dir, names = args[0], args[1:]
     else:
         sf_dir, names = "/root/testdata/sf0.1", args
-    q = entrymod.queries()
-    o = entrymod.oracle_sql()
-    unknown = sorted(set(names) - set(q))
+    # checked before Spark starts: a name in only one registry would
+    # otherwise surface as a KeyError after startup
+    unknown = sorted(set(names) - pairs)
     if unknown:
-        print(f"error: unknown pair name(s) {unknown}; choose from {sorted(q)}")
+        print(f"error: unknown pair name(s) {unknown}; choose from {sorted(pairs)}")
         return 2
     spark = get_spark()
     con = duck_connection(sf_dir)
-    selected = sorted(names) if names else sorted(q)
+    selected = sorted(names) if names else sorted(pairs)
     n_fail = 0
     t_all = time.time()
     for name in selected:

@@ -8,6 +8,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
+# session.py's 24g JVM heap default is sized for large benchmark hosts;
+# the test corpus is tiny, and a 24g heap on a 16 GB machine gets the
+# test workers OOM-killed. Set before the session starts.
+os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -27,6 +27,22 @@ def test_query_matches_oracle(spark, duck, name, fn, sql):
     assert rep["spark_rows"] > 0, f"{name}: trivially-green 0-row oracle"
 
 
+def test_oracle_columns_have_no_wide_numeric_types(duck):
+    """DuckDB types an un-cast integer sum() as HUGEINT and decimal
+    arithmetic as DECIMAL; an Arrow-fetching comparator reads those as
+    128-bit/decimal values that never equal Spark's bigint/double, so
+    every oracle column must come back as a plain integer/float type."""
+    wide = {}
+    for name, sql in sorted(entrymod.oracle_sql().items()):
+        rel = duck.sql(sql)
+        assert rel.fetchall(), f"{name}: oracle returned no rows"
+        cols = [f"{c} {t}" for c, t in zip(rel.columns, rel.types)
+                if str(t).startswith(("DECIMAL", "HUGEINT", "UHUGEINT"))]
+        if cols:
+            wide[name] = cols
+    assert not wide, wide
+
+
 def test_every_query_has_oracle():
     q = entrymod.queries()
     o = entrymod.oracle_sql()

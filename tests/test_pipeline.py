@@ -169,6 +169,52 @@ def test_run_pyramid_resume(spark, docs, tmp_path):
     assert metrics["snapshot_id"] == snaps[-1]["snapshot_id"]
 
 
+def test_run_pyramid_per_zoom_stages(spark, docs, tmp_path):
+    """per_zoom_stages=True walks the same stage graph with one tile
+    stage per zoom: it reuses the fused run's upstream checkpoints, gives
+    the fused path's rows, and a resume after losing one zoom's
+    checkpoint rewrites only that zoom's directory."""
+    import json
+    import shutil
+
+    from tilemaker_spark import pipeline
+
+    zooms = [14, 12, 6]
+    cols = ["z", "x", "y", "tile", "feature_count", "geometry_hash", "raw_bytes"]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    out = str(tmp_path / "pyr")
+    fused = rows(pipeline.run_pyramid(spark, docs, out, zooms=zooms))
+    per_zoom = rows(pipeline.run_pyramid(spark, docs, out, zooms=zooms,
+                                         per_zoom_stages=True))
+    assert len(fused) > 100
+    assert per_zoom == fused
+
+    lin = os.path.join(out, "_lineage")
+    snap_path = os.path.join(lin, "snapshots.jsonl")
+    snaps = [json.loads(l) for l in open(snap_path) if l.strip()]
+    assert [s["stage"] for s in snaps] == [
+        "features", "base_tiles", "tiles", "tiles_z14", "tiles_z12", "tiles_z6"]
+    for z in zooms:
+        assert os.path.exists(os.path.join(lin, f"metrics_tiles_z{z}.json"))
+
+    stage_dirs = sorted(d for d in os.listdir(out) if d.startswith("stage_"))
+    mtimes = {d: os.path.getmtime(os.path.join(out, d, "_SUCCESS")) for d in stage_dirs}
+    shutil.rmtree(os.path.join(out, "stage_tiles_z12"))
+    resumed = rows(pipeline.run_pyramid(spark, docs, out, zooms=zooms,
+                                        per_zoom_stages=True))
+    assert resumed == fused
+    rewritten = [d for d in stage_dirs
+                 if os.path.getmtime(os.path.join(out, d, "_SUCCESS")) != mtimes[d]]
+    assert rewritten == ["stage_tiles_z12"]
+    after = [json.loads(l) for l in open(snap_path) if l.strip()]
+    assert after[:-1] == snaps
+    assert after[-1]["stage"] == "tiles_z12"
+    assert after[-1]["parent_id"] == snaps[-1]["snapshot_id"]
+
+
 def test_mbtiles_sink(spark, tiles, tmp_path):
     import sqlite3
 
@@ -291,42 +337,6 @@ def test_stream_group_exchanges_pinned(spark, docs):
     assert re.search(r"REPARTITION_BY_NUM.*hashpartitioning\(z#\d+", eplan) or \
         re.search(r"hashpartitioning\(z#\d+[^\n]*REPARTITION_BY_NUM", eplan), eplan[:3000]
     assert "REPARTITION_BY_COL" not in eplan, eplan[:3000]
-
-
-def test_salted_encode_byte_identical(spark, docs):
-    """The salted two-stage encoder (skew shave: partition at
-    (layer, kind, attr-class) granularity, rebuild dictionaries in a
-    light second stage) must produce byte-identical tiles to the
-    single-stage path — same bytes, hashes, counts — on real pipeline
-    data with combine on (the hardest case: A5 merge runs must not
-    split across salt buckets)."""
-    from tilemaker_spark import pipeline, tileassign
-    from tilemaker_spark.config import default_config
-    from tilemaker_spark.encode import encode_zoom
-
-    features = pipeline.build_features(*__import__(
-        "tilemaker_spark.geocode", fromlist=["geocode"]).geocode(docs))
-    assigned = tileassign.assign_base_tiles(features, 14)
-    rolled = tileassign.rollup_all_zooms(assigned, [14, 12, 6], 14)
-    cfg = default_config()
-    cfg.combine_similar = True  # reference default ON — the hard case
-
-    plain = encode_zoom(rolled, cfg, salted=False)
-    salted = encode_zoom(rolled, cfg, salted=True)
-
-    # both Python exchanges in the salted plan must be pinned
-    splan = salted._jdf.queryExecution().executedPlan().toString()
-    assert "REPARTITION_BY_COL" not in splan, splan[:3000]
-
-    key = lambda r: (r["z"], r["x"], r["y"])
-    a = {key(r): (bytes(r["tile"]), r["feature_count"], r["geometry_hash"],
-                  r["raw_bytes"]) for r in plain.collect()}
-    b = {key(r): (bytes(r["tile"]), r["feature_count"], r["geometry_hash"],
-                  r["raw_bytes"]) for r in salted.collect()}
-    assert set(a) == set(b)
-    diff = [k for k in a if a[k] != b[k]]
-    assert not diff, f"{len(diff)} tiles differ, e.g. {diff[:5]}"
-    assert len(a) > 100  # non-trivial corpus
 
 
 def test_bounding_box_coord_parity(spark, docs):

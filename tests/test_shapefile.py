@@ -9,6 +9,7 @@ real-shapefile path too."""
 from __future__ import annotations
 
 import os
+import re
 import struct
 
 import numpy as np
@@ -193,6 +194,29 @@ def test_lines_fixture_matches_formula():
             np.testing.assert_array_equal(r["ring_lon"], elon)
             np.testing.assert_array_equal(r["ring_latp"], elat)
     assert n_multi == N_FIXTURE_LINES // 4
+
+
+def test_j8_oracle_fixture_read_on_first_use(tmp_path, monkeypatch):
+    """queries_spatial imports without touching lines.dbf; the J8
+    oracle's first use fails with the fixture's path named when the file
+    is missing or truncated, and counts its records when it is whole."""
+    from tilemaker_spark import queries_spatial as QS
+
+    monkeypatch.delitem(QS.__dict__, "ORACLES", raising=False)
+    missing = str(tmp_path / "lines.dbf")
+    monkeypatch.setattr(QS, "_LINES_DBF", missing)
+    with pytest.raises(FileNotFoundError, match=re.escape(missing)):
+        QS.ORACLES
+    real = open(os.path.join(os.path.dirname(SHP.__file__), "data", "lines.dbf"),
+                "rb").read()
+    for cut in (6, len(real) // 2):
+        with open(missing, "wb") as f:
+            f.write(real[:cut])
+        with pytest.raises(ValueError, match=re.escape(missing)):
+            QS.ORACLES
+    with open(missing, "wb") as f:
+        f.write(real)
+    assert f"range({N_FIXTURE_LINES})" in QS.ORACLES["j8_shp_line_cover"]
 
 
 def test_dbf_roundtrip(tmp_path):

@@ -36,7 +36,6 @@ AttributeNumeric/AttributeBoolean (src/osm_lua_processing.cpp:335-356).
 
 from __future__ import annotations
 
-import os
 import zlib
 
 import numpy as np
@@ -45,6 +44,7 @@ from pyspark.sql import DataFrame
 
 from .config import Config
 from .kernels import clip as C, geomops, geompack, mercator as M, mvt, simplify as S
+from .streamgroups import stream_grouped
 
 LAYER_GROUP_SCHEMA = ("z int, x long, y long, order_idx int, layer_bytes binary, "
                       "feature_count int, layer_hash long, raw_bytes int")
@@ -232,11 +232,11 @@ def _centroid_cmds(geom_buf, lonv, latpv, bb, box):
 
 def _gen_features(cols, sel, tol, bb, box, combine):
     """Walk one sorted row selection — all rows of one sub-layer within
-    a (tile, out_layer) group, or one (layer, kind, _ak) segment in the
-    salted path — and yield ``(ri, geom_type, cmds, geom_bytes_or_None)``
-    per output feature. Exact reference tile-worker flow
-    (src/tile_worker.cpp:102-254): batched plain points, A5 combine
-    runs, clip -> union -> simplify -> delta encode."""
+    a (tile, out_layer) group — and yield
+    ``(ri, geom_type, cmds, geom_bytes_or_None)`` per output feature.
+    Exact reference tile-worker flow (src/tile_worker.cpp:102-254):
+    batched plain points, A5 combine runs, clip -> union -> simplify ->
+    delta encode."""
     kind_a = cols["kind"]
     ak_a = cols["ak"]
     geom_a = cols["geom"]
@@ -372,52 +372,12 @@ def _cols_from_pdf(pdf: pd.DataFrame) -> dict:
     }
 
 
-def _tag_indices(dicts, tag_cache: dict, akv, sattrs, nattrs, battrs) -> list:
-    """A8/G17 dictionary-encoded tag index list for one attr class.
-
-    Indices are a pure function of the attrs (== the canonical `_ak`)
-    given the dictionary's first-occurrence registration, so they are
-    cached per (tile, layer) group under the `_ak` value. ONE shared
-    implementation: the single-stage stream encoder and the salted
-    stage-2 assembler must produce byte-identical layers (parity pinned
-    by tests), so the registration order here is the contract."""
-    tag_idx = tag_cache.get(akv)
-    if tag_idx is None:
-        tag_idx = []
-        if sattrs:
-            for k in sorted(sattrs):
-                tag_idx.append(dicts.key_index(k))
-                tag_idx.append(dicts.value_index(sattrs[k]))
-        if nattrs:
-            for k in sorted(nattrs):
-                tag_idx.append(dicts.key_index(k))
-                tag_idx.append(dicts.value_index(float(nattrs[k])))
-        if battrs:
-            for k in sorted(battrs):
-                tag_idx.append(dicts.key_index(k))
-                tag_idx.append(dicts.value_index(bool(battrs[k])))
-        tag_cache[akv] = tag_idx
-    return tag_idx
-
-
 def _seg_starts(n: int, *arrays) -> np.ndarray:
     """Boundary offsets of the contiguous equal-key segments of
     ``arrays`` (all length n, pre-sorted): [0, ...changes, n]."""
     masks = [a[1:] != a[:-1] for a in arrays]
     return np.concatenate(
         ([0], np.flatnonzero(np.logical_or.reduce(masks)) + 1, [n]))
-
-
-def _group_stream(batch_fn, pdf_key_cols):
-    """mapInPandas wrapper: re-batch the Arrow stream so no
-    ``pdf_key_cols`` group straddles a batch handed to ``batch_fn``
-    (groups are contiguous — the partition is sorted by these keys).
-    Thin adapter over the ONE shared carry/boundary implementation
-    (streamgroups.stream_grouped) — the AQE-sensitive contract lives
-    there, see the streamgroups module docstring."""
-    from .streamgroups import stream_grouped
-
-    return stream_grouped(list(pdf_key_cols), batch_fn)
 
 
 def make_stream_encoder(cfg: Config):
@@ -473,14 +433,32 @@ def make_stream_encoder(cfg: Config):
         n_feats = 0
         ghash = 0
         tag_cache: dict = {}
-        ak_col = ak_a
 
         def emit(gt, cmds, row_i, geom_bytes=None):
             nonlocal n_feats, ghash
-            tag_idx = _tag_indices(
-                dicts, tag_cache, ak_col[row_i], attrs_a[row_i],
-                anum_a[row_i] if anum_a is not None else None,
-                abool_a[row_i] if abool_a is not None else None)
+            # A8/G17 tag indices are a pure function of the attrs (== the
+            # canonical `_ak`) given the dictionary's first-occurrence
+            # registration, so they are cached per group under `_ak`
+            akv = ak_a[row_i]
+            tag_idx = tag_cache.get(akv)
+            if tag_idx is None:
+                tag_idx = []
+                sattrs = attrs_a[row_i]
+                nattrs = anum_a[row_i] if anum_a is not None else None
+                battrs = abool_a[row_i] if abool_a is not None else None
+                if sattrs:
+                    for k in sorted(sattrs):
+                        tag_idx.append(dicts.key_index(k))
+                        tag_idx.append(dicts.value_index(sattrs[k]))
+                if nattrs:
+                    for k in sorted(nattrs):
+                        tag_idx.append(dicts.key_index(k))
+                        tag_idx.append(dicts.value_index(float(nattrs[k])))
+                if battrs:
+                    for k in sorted(battrs):
+                        tag_idx.append(dicts.key_index(k))
+                        tag_idx.append(dicts.value_index(bool(battrs[k])))
+                tag_cache[akv] = tag_idx
             if geom_bytes is None:
                 geom_bytes = mvt.varint_array(cmds)
             feats.append(mvt.encode_feature_raw(
@@ -518,167 +496,9 @@ def make_stream_encoder(cfg: Config):
             _encode_run(cols, int(starts[si]), int(starts[si + 1]), out_rows)
         return pd.DataFrame(out_rows, columns=_OUT_COLS)
 
-    return _group_stream(_encode_batch, ["z", "x", "y", "_out_layer"])
-
-
-# --------------------------------------------- salted two-stage encoder
-#
-# The skew answer for metro tiles (VERDICT r3 next #3): one
-# (tile, out_layer) group bounds the single-stage encoder's max task.
-# The finest granularity at which a group can be split WITHOUT changing
-# output bytes is the (layer, kind, _ak) class — A4 dedup identity and
-# A5 combine runs both live entirely inside one class. Stage 1 hash-
-# partitions on (tile, out_layer, layer, kind, salt(attrs)) and does all
-# heavy geometry work (unpack, clip, union, simplify, command varints)
-# per class at full parallelism; stage 2 regroups per (tile, out_layer),
-# sorts features by the A4 key, and rebuilds the per-layer dictionaries
-# and feature order — byte-identical to the single-stage path (pinned
-# by tests), but the hot group's cost in stage 2 is only string/dict
-# work bounded by the tile's OUTPUT size.
-
-FEATURE_SCHEMA = (
-    "z int, x long, y long, order_idx int, sub_idx int, kind int, "
-    "ak string, elem string, oid long, gt int, geom_bytes binary, "
-    "crc long, attrs map<string,string>, attrs_num map<string,double>, "
-    "attrs_bool map<string,boolean>")
-_FEAT_COLS = ["z", "x", "y", "order_idx", "sub_idx", "kind", "ak", "elem",
-              "oid", "gt", "geom_bytes", "crc", "attrs", "attrs_num",
-              "attrs_bool"]
-
-
-def make_feature_encoder(cfg: Config):
-    """Stage 1 mapInPandas: sorted (tile, out_layer, layer, kind, _ak)
-    segments -> one row per output feature (geometry fully encoded)."""
-    layers_cfg = cfg.layers
-    group_index = {group[0]: (i, group) for i, group in enumerate(cfg.layer_order)}
-    sub_pos = {}
-    for gi, group in enumerate(cfg.layer_order):
-        for si, sub in enumerate(group):
-            sub_pos[sub] = si
-    combine = cfg.combine_similar
-    bbox_cfg = cfg.bounding_box
-
-    def _encode_seg(cols, s, e, out_rows):
-        out_layer = cols["ol"][s]
-        gi = group_index.get(out_layer)
-        if gi is None:
-            return
-        order_idx, _group = gi
-        sub = cols["layer"][s]
-        ld = layers_cfg.get(sub)
-        if ld is None:
-            return
-        z = int(cols["z"][s])
-        if z < ld.minzoom or z > ld.maxzoom:
-            return  # F8 backstop
-        x = int(cols["x"][s])
-        y = int(cols["y"][s])
-        bb = M.TileBbox(x, y, z)
-        if bbox_cfg is not None:
-            mnl, mnla, mxl, mxla = bbox_cfg
-            if mxl <= bb.min_lon or mnl >= bb.max_lon or \
-               mxla <= bb.min_lat or mnla >= bb.max_lat:
-                return  # F7
-        box = bb.clip_box
-        elem_a, oid_a = cols["elem"], cols["oid"]
-        # A4 dedup: layer/kind/_ak are constant over the segment, so
-        # identity reduces to adjacent-equal (elem, object_id)
-        idx = np.arange(s, e)
-        if e - s > 1:
-            dup = ((elem_a[s + 1:e] == elem_a[s:e - 1])
-                   & (oid_a[s + 1:e] == oid_a[s:e - 1]))
-            idx = idx[np.concatenate(([True], ~dup))]
-        tol = ld.simplify_tolerance(z, y)
-        akv = cols["ak"][s]
-        attrs_a, anum_a, abool_a = cols["attrs"], cols["anum"], cols["abool"]
-        sub_idx = sub_pos[sub]
-        for ri, gt, cmds, gbytes in _gen_features(cols, idx, tol, bb, box, combine):
-            if gbytes is None:
-                gbytes = mvt.varint_array(cmds)
-            out_rows.append((
-                z, x, y, order_idx, sub_idx, int(cols["kind"][ri]), akv,
-                elem_a[ri], int(oid_a[ri]), int(gt), bytes(gbytes),
-                int(zlib.crc32(cmds.tobytes())), attrs_a[ri],
-                anum_a[ri] if anum_a is not None else None,
-                abool_a[ri] if abool_a is not None else None))
-
-    def _encode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = _cols_from_pdf(pdf)
-        n = len(pdf)
-        starts = _seg_starts(n, cols["z"], cols["x"], cols["y"], cols["ol"],
-                             cols["layer"], cols["kind"], cols["ak"])
-        out_rows: list = []
-        for si in range(len(starts) - 1):
-            _encode_seg(cols, int(starts[si]), int(starts[si + 1]), out_rows)
-        return pd.DataFrame(out_rows, columns=_FEAT_COLS)
-
-    return _group_stream(
-        _encode_batch, ["z", "x", "y", "_out_layer", "layer", "kind", "_ak"])
-
-
-def make_layer_assembler(cfg: Config):
-    """Stage 2 mapInPandas: per-feature rows sorted by
-    (z, x, y, order_idx, sub_idx, kind, ak, elem, oid) -> one encoded
-    layer-group row per (tile, out_layer). Pure string/dict work: tag
-    dictionaries register in feature order exactly as the single-stage
-    encoder's first-occurrence walk."""
-    include_ids = cfg.include_ids
-    mvt_version = cfg.mvt_version
-    layer_names = [group[0] for group in cfg.layer_order]
-
-    def _assemble_group(cols, s, e, out_rows):
-        z = int(cols["z"][s])
-        x = int(cols["x"][s])
-        y = int(cols["y"][s])
-        order_idx = int(cols["order_idx"][s])
-        ak_a, gt_a, gb_a, crc_a, oid_a = (cols["ak"], cols["gt"], cols["gb"],
-                                          cols["crc"], cols["oid"])
-        attrs_a, anum_a, abool_a = cols["attrs"], cols["anum"], cols["abool"]
-        dicts = mvt.LayerDicts()
-        feats = []
-        ghash = 0
-        tag_cache: dict = {}
-        for i in range(s, e):
-            tag_idx = _tag_indices(dicts, tag_cache, ak_a[i],
-                                   attrs_a[i], anum_a[i], abool_a[i])
-            gt = int(gt_a[i])
-            feats.append(mvt.encode_feature_raw(
-                gt, bytes(gb_a[i]), tag_idx,
-                feature_id=int(oid_a[i]) if include_ids else None))
-            ghash = (ghash * 1000003 + int(crc_a[i]) + gt) & 0x7FFFFFFFFFFFFFFF
-        if not feats:
-            return  # F9
-        layer_msg = mvt.encode_layer(layer_names[order_idx], feats,
-                                     dicts.keys, dicts.values,
-                                     version=mvt_version)
-        framed = mvt.encode_tile([layer_msg])
-        out_rows.append((z, x, y, order_idx, framed, len(feats),
-                         int(ghash), len(framed)))
-
-    def _assemble_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = {
-            "z": pdf["z"].to_numpy(dtype=np.int64),
-            "x": pdf["x"].to_numpy(dtype=np.int64),
-            "y": pdf["y"].to_numpy(dtype=np.int64),
-            "order_idx": pdf["order_idx"].to_numpy(dtype=np.int64),
-            "ak": pdf["ak"].to_numpy(dtype=object),
-            "gt": pdf["gt"].to_numpy(dtype=np.int64),
-            "gb": pdf["geom_bytes"].to_numpy(dtype=object),
-            "crc": pdf["crc"].to_numpy(dtype=np.int64),
-            "oid": pdf["oid"].to_numpy(dtype=np.int64),
-            "attrs": pdf["attrs"].to_numpy(dtype=object),
-            "anum": pdf["attrs_num"].to_numpy(dtype=object),
-            "abool": pdf["attrs_bool"].to_numpy(dtype=object),
-        }
-        n = len(pdf)
-        starts = _seg_starts(n, cols["z"], cols["x"], cols["y"],
-                             cols["order_idx"])
-        out_rows: list = []
-        for si in range(len(starts) - 1):
-            _assemble_group(cols, int(starts[si]), int(starts[si + 1]), out_rows)
-        return pd.DataFrame(out_rows, columns=_OUT_COLS)
-
-    return _group_stream(_assemble_batch, ["z", "x", "y", "order_idx"])
+    # groups are contiguous (the partition is sorted by them); see the
+    # streamgroups module docstring for the batch-boundary carry contract
+    return stream_grouped(["z", "x", "y", "_out_layer"], _encode_batch)
 
 
 def zoom_range_predicate(cfg: Config):
@@ -708,10 +528,9 @@ def zoom_eligible(assigned: DataFrame, cfg: Config) -> DataFrame:
     return assigned.where(zoom_range_predicate(cfg))
 
 
-def encode_zoom(assigned: DataFrame, cfg: Config,
-                salted: bool | None = None) -> DataFrame:
-    """(z,x,y,...feature rows) -> (z,x,y,tile,...) in two stages:
-    streaming per-(tile,output-layer) encode, then Catalyst tile assembly.
+def encode_zoom(assigned: DataFrame, cfg: Config) -> DataFrame:
+    """(z,x,y,...feature rows) -> (z,x,y,tile,...): streaming
+    per-(tile,output-layer) encode, then Catalyst tile assembly.
 
     Scale-critical shaping BEFORE the shuffle (all Catalyst):
     - F8 zoom-range filter pushed down: a z0 tile would otherwise
@@ -740,32 +559,6 @@ def encode_zoom(assigned: DataFrame, cfg: Config,
     from .session import python_stage_partitions
 
     n_parts = python_stage_partitions(assigned.sparkSession, input_df=assigned)
-    if salted is None:
-        # Operator override for cluster tuning (SPARK_GRAFT_SALTED=1
-        # forces the two-stage skew shave, =0 forces single-stage).
-        env = os.environ.get("SPARK_GRAFT_SALTED", "").strip().lower()
-        if env in ("1", "true", "on"):
-            salted = True
-        elif env in ("0", "false", "off"):
-            salted = False
-        elif env:
-            # a set-but-unrecognized value must not silently fall through
-            # to the default — the operator believes they forced a path
-            raise ValueError(
-                f"SPARK_GRAFT_SALTED={env!r} not recognized; "
-                "use 1/true/on or 0/false/off (unset = measured default)")
-        else:
-            # Default OFF, measured: the two-stage path re-shuffles
-            # every encoded feature (geom bytes + attr maps) to shave a
-            # max-task ≈ 4× mean skew tail, and that trade LOSES on the
-            # ×256 metro-skew workload at both measured parallelism
-            # levels (8c: 270.4 → 180.7 s; 32c: 128.0 → 102.1 s
-            # unsalted, min-of-N same-session A/B, bench_runs/r4_ab*).
-            # It pays only when one (tile, out_layer) group exceeds a
-            # core's share of the whole stage — planetary-grade skew —
-            # which an operator asserts via the env/param, not a
-            # heuristic this box cannot validate.
-            salted = False
     # `_ak` (array transforms + sort + string joins over the attr maps)
     # is the most expensive Catalyst expression in the plan. Computing
     # it AFTER the pinned exchange moves that CPU from the rollup's
@@ -773,48 +566,12 @@ def encode_zoom(assigned: DataFrame, cfg: Config,
     # (coalescing is blind to per-row CPU) — into the explicitly
     # fine-partitioned (cores×8) encode stage. It is not a partition
     # key, only a sort key, so placement above the repartition is free.
-    if salted:
-        # skew shave: hash-partition at (layer, kind, attr-class)
-        # granularity. The salt is a CHEAP canonical attr hash computed
-        # pre-exchange (sorted key/value arrays: equal maps -> equal
-        # salt, so no dedup/combine class ever splits); the expensive
-        # `_ak` string stays post-exchange per the r3 straggler fix.
-        salt_parts = [F.col("layer"), F.col("kind"),
-                      F.array_sort(F.map_keys("attrs")),
-                      F.array_sort(F.map_values("attrs"))]
-        if has_num:
-            salt_parts += [F.array_sort(F.map_keys("attrs_num")),
-                           F.array_sort(F.map_values("attrs_num"))]
-        if has_bool:
-            salt_parts += [F.array_sort(F.map_keys("attrs_bool")),
-                           F.array_sort(F.map_values("attrs_bool"))]
-        part = (eligible
-                .withColumn("_salt", F.xxhash64(*salt_parts))
-                .repartition(n_parts, F.col("z"), F.col("x"), F.col("y"),
-                             F.col("_out_layer"), F.col("layer"),
-                             F.col("kind"), F.col("_salt"))
-                .withColumn("_ak", ak)
-                .sortWithinPartitions(*_SORT_COLS))
-        feat_rows = part.mapInPandas(make_feature_encoder(cfg),
-                                     schema=FEATURE_SCHEMA)
-        # stage 2 is light (dict/string work bounded by tile OUTPUT
-        # bytes) — coarser pinned partitioning, same AQE-proof shape
-        n2 = python_stage_partitions(assigned.sparkSession, multiplier=2,
-                                     input_df=assigned)
-        layer_groups = (feat_rows
-                        .repartition(n2, "z", "x", "y", "order_idx")
-                        .sortWithinPartitions("z", "x", "y", "order_idx",
-                                              "sub_idx", "kind", "ak",
-                                              "elem", "oid")
-                        .mapInPandas(make_layer_assembler(cfg),
-                                     schema=LAYER_GROUP_SCHEMA))
-    else:
-        part = (eligible
-                .repartition(n_parts, F.col("z"), F.col("x"), F.col("y"), F.col("_out_layer"))
-                .withColumn("_ak", ak)
-                .sortWithinPartitions(*_SORT_COLS))
-        layer_groups = part.mapInPandas(make_stream_encoder(cfg),
-                                        schema=LAYER_GROUP_SCHEMA)
+    part = (eligible
+            .repartition(n_parts, F.col("z"), F.col("x"), F.col("y"), F.col("_out_layer"))
+            .withColumn("_ak", ak)
+            .sortWithinPartitions(*_SORT_COLS))
+    layer_groups = part.mapInPandas(make_stream_encoder(cfg),
+                                    schema=LAYER_GROUP_SCHEMA)
 
     # ---- W4 tile assembly: order layers, concat framed bytes (Catalyst)
     parts = (layer_groups.groupBy("z", "x", "y").agg(

@@ -1,19 +1,21 @@
 """End-to-end pyramid pipeline with resumable checkpoint stages.
 
-Stage graph (SURVEY.md §3.1 "Spark shape"):
+Stage graph (SURVEY.md §3.1 "Spark shape"), described once by
+``stage_graph`` and walked by both entry points:
 
-  documents --extract/geocode--> stores (nodes/ways/relations)
-            --classify--> feature emissions
-            --assemble--> features+geometry        [checkpoint]
-            --assign_tiles (base zoom)-->          [checkpoint]
-            --per zoom: rollup + encode--> tiles   [checkpoint per zoom]
-            --package--> file-per-tile / mbtiles
+  features     documents --extract/geocode--> stores (nodes/ways/relations)
+               --classify--> feature emissions --assemble--> features+geometry
+  base_tiles   assign_tiles at the base zoom (the big fan-out)
+  tiles        all-zoom rollup + encode, fused into one job
+               (or one ``tiles_z{z}`` stage per zoom: per_zoom_stages)
 
-Each checkpoint is a Parquet table (the sandbox stand-in for Iceberg
-snapshots — same resumability contract: a completed stage directory is
-reused on re-run, per-partition lineage metrics recorded alongside).
-Replaces the reference's in-process TileIndex shard store
-(include/tile_data.h:12) per the north_rule.
+then a sink: file-per-tile or MBTiles. ``pyramid_df`` builds the graph
+as one lazy plan; ``run_pyramid`` writes every stage as a Parquet
+checkpoint (the sandbox stand-in for Iceberg snapshots — same
+resumability contract: a completed stage directory is reused on re-run,
+per-partition lineage metrics recorded alongside). Replaces the
+reference's in-process TileIndex shard store (include/tile_data.h:12)
+per the north_rule.
 """
 
 from __future__ import annotations
@@ -21,6 +23,8 @@ from __future__ import annotations
 import json
 import os
 import time
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,6 +32,7 @@ from pyspark.sql import functions as F
 from . import assemble, classify, extract, geocode, tileassign
 from .config import Config, default_config
 from .encode import encode_zoom
+from .session import python_stage_partitions
 
 BASE_TILE_COLS = ["object_id", "elem", "layer", "kind", "attrs", "attrs_num",
                   "attrs_bool", "as_centroid", "geom", "lon", "latp",
@@ -38,7 +43,7 @@ def _stage_done(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
-def _write_stage(df: DataFrame, path: str, partition_by: list | None = None) -> None:
+def _write_stage(df: DataFrame, path: str, partition_by: tuple = ()) -> None:
     w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
@@ -116,22 +121,75 @@ def build_features(nodes: DataFrame, ways: DataFrame, relations: DataFrame) -> D
                                       node_feats, way_feats, rel_feats)
 
 
+@dataclass(frozen=True)
+class Stage:
+    """One node of the pyramid's stage graph. ``build`` maps the output
+    of ``source`` (None for the first stage) to this stage's lazy
+    DataFrame; the remaining fields only shape its parquet checkpoint
+    (``stage_<name>/`` + ``_lineage/metrics_<name>.json``)."""
+    name: str
+    source: str | None
+    build: Callable[[DataFrame | None], DataFrame]
+    layout: Callable[[DataFrame, DataFrame], DataFrame] | None = None
+    partition_by: tuple = ()
+    hash_col: str | None = None
+
+
+def stage_graph(spark: SparkSession, docs: DataFrame, cfg: Config,
+                zooms: list | None = None, per_zoom_stages: bool = False) -> list:
+    """The pyramid's stage graph, in execution order — the ONE
+    description both pyramid_df (lazy) and run_pyramid (checkpointed)
+    walk. The tile stages are the sinks: nothing consumes them."""
+    zooms = zooms if zooms is not None else list(range(cfg.minzoom, cfg.maxzoom + 1))
+
+    def features(_):
+        return build_features(*build_stores(spark, docs))
+
+    def base_tiles(feats):
+        return tileassign.assign_base_tiles(feats, cfg.basezoom)
+
+    def cluster_by_tile(assigned, feats):
+        # cluster by tile for locality of every downstream rollup/encode
+        # (pinned count: an unpinned repartition(col) may be rewritten by
+        # AQE's local shuffle read, silently dropping the clustering)
+        return (assigned.repartition(python_stage_partitions(spark, input_df=feats),
+                                     F.col("tile_x"), F.col("tile_y"))
+                .select(*BASE_TILE_COLS))
+
+    graph = [Stage("features", None, features),
+             Stage("base_tiles", "features", base_tiles, layout=cluster_by_tile)]
+    if per_zoom_stages:
+        # one resumable stage per zoom level (north_rule) — the shape a
+        # week-long 100 TB run wants: a failed z re-runs alone.
+        graph += [Stage(f"tiles_z{z}", "base_tiles",
+                        lambda base, z=z: encode_zoom(
+                            tileassign.rollup_to_zoom(base, z, cfg.basezoom, cfg=cfg), cfg),
+                        hash_col="geometry_hash")
+                  for z in zooms]
+    else:
+        # fused (default): the whole pyramid in one job — one scan of the
+        # base table, map-side-combined dedup, one encode shuffle.
+        graph.append(Stage("tiles", "base_tiles",
+                           lambda base: encode_zoom(tileassign.rollup_all_zooms(
+                               base, zooms, cfg.basezoom, cfg=cfg), cfg),
+                           partition_by=("z",), hash_col="geometry_hash"))
+    return graph
+
+
 def pyramid_df(spark: SparkSession, docs: DataFrame, cfg: Config | None = None,
                zooms: list | None = None) -> DataFrame:
     """Lazy end-to-end pyramid: documents -> tiles DataFrame, no
     checkpoint writes — one declarative plan for Catalyst to optimize
     whole (used by entry()/bench; run_pyramid adds resumability)."""
-    cfg = cfg or default_config()
-    zooms = zooms if zooms is not None else list(range(cfg.minzoom, cfg.maxzoom + 1))
-    nodes, ways, relations = build_stores(spark, docs)
-    # assign_base_tiles consumes features through two filter branches
-    # (points / geometries) — eager localCheckpoint so the
-    # classify+assemble subtree executes once (run_pyramid gets the same
-    # effect from its parquet stage checkpoint)
-    features = build_features(nodes, ways, relations).localCheckpoint()
-    assigned = tileassign.assign_base_tiles(features, cfg.basezoom)
-    rolled = tileassign.rollup_all_zooms(assigned, zooms, cfg.basezoom, cfg=cfg)
-    return encode_zoom(rolled, cfg)
+    out: dict = {}
+    for st in stage_graph(spark, docs, cfg or default_config(), zooms):
+        df = st.build(out.get(st.source))
+        # assign_base_tiles consumes features through two filter branches
+        # (points / geometries) — eager localCheckpoint so the
+        # classify+assemble subtree executes once (run_pyramid gets the
+        # same effect from its parquet stage checkpoint)
+        out[st.name] = df.localCheckpoint() if st.name == "features" else df
+    return out["tiles"]
 
 
 def run_pyramid(spark: SparkSession, docs: DataFrame, out_dir: str,
@@ -145,63 +203,29 @@ def run_pyramid(spark: SparkSession, docs: DataFrame, out_dir: str,
     resume granularity at the cost of re-scanning the base table per
     zoom); the default fuses all zooms into one rollup+encode job.
     """
-    cfg = cfg or default_config()
-    zooms = zooms if zooms is not None else list(range(cfg.minzoom, cfg.maxzoom + 1))
+    graph = stage_graph(spark, docs, cfg or default_config(), zooms, per_zoom_stages)
     os.makedirs(out_dir, exist_ok=True)
     metrics_dir = os.path.join(out_dir, "_lineage")
+    path = {st.name: os.path.join(out_dir, f"stage_{st.name}") for st in graph}
+    read: dict = {}
 
-    # ---- stage 1: features (classify + assemble)
-    feat_path = os.path.join(out_dir, "stage_features")
-    if not (resume and _stage_done(feat_path)):
-        nodes, ways, relations = build_stores(spark, docs)
-        features = build_features(nodes, ways, relations)
-        _write_stage(features, feat_path)
-        _lineage(spark, spark.read.parquet(feat_path), "features", metrics_dir)
-    features = spark.read.parquet(feat_path)
+    def load(name):
+        if name not in read:
+            read[name] = spark.read.parquet(path[name])
+        return read[name]
 
-    # ---- stage 2: base-zoom tile assignment (the big fan-out)
-    base_path = os.path.join(out_dir, "stage_base_tiles")
-    if not (resume and _stage_done(base_path)):
-        assigned = tileassign.assign_base_tiles(features, cfg.basezoom)
-        # cluster by tile for locality of every downstream rollup/encode
-        # (pinned count: an unpinned repartition(col) may be rewritten by
-        # AQE's local shuffle read, silently dropping the clustering)
-        from .session import python_stage_partitions
-
-        assigned = assigned.repartition(
-            python_stage_partitions(spark, input_df=features),
-            F.col("tile_x"), F.col("tile_y"))
-        _write_stage(assigned.select(*BASE_TILE_COLS), base_path)
-        _lineage(spark, spark.read.parquet(base_path), "base_tiles", metrics_dir)
-    base_assigned = spark.read.parquet(base_path)
-
-    # ---- stage 3: rollup + encode
-    if per_zoom_stages:
-        # one resumable stage per zoom level (north_rule) — the shape a
-        # week-long 100 TB run wants: a failed z re-runs alone.
-        tile_paths = []
-        for z in zooms:
-            zpath = os.path.join(out_dir, f"stage_tiles_z{z}")
-            tile_paths.append(zpath)
-            if resume and _stage_done(zpath):
-                continue
-            rolled = tileassign.rollup_to_zoom(base_assigned, z, cfg.basezoom, cfg=cfg)
-            tiles = encode_zoom(rolled, cfg)
-            _write_stage(tiles, zpath)
-            _lineage(spark, spark.read.parquet(zpath), f"tiles_z{z}", metrics_dir,
-                     hash_col="geometry_hash")
-        return spark.read.parquet(*tile_paths)
-
-    # fused path (default): the whole pyramid in one job — one scan of
-    # the base table, map-side-combined dedup, one encode shuffle.
-    tiles_path = os.path.join(out_dir, "stage_tiles")
-    if not (resume and _stage_done(tiles_path)):
-        rolled = tileassign.rollup_all_zooms(base_assigned, zooms, cfg.basezoom, cfg=cfg)
-        tiles = encode_zoom(rolled, cfg)
-        _write_stage(tiles, tiles_path, partition_by=["z"])
-        _lineage(spark, spark.read.parquet(tiles_path), "tiles", metrics_dir,
-                 hash_col="geometry_hash")
-    return spark.read.parquet(tiles_path)
+    for st in graph:
+        if resume and _stage_done(path[st.name]):
+            continue
+        src = load(st.source) if st.source else None
+        df = st.build(src)
+        if st.layout:
+            df = st.layout(df, src)
+        _write_stage(df, path[st.name], st.partition_by)
+        _lineage(spark, spark.read.parquet(path[st.name]), st.name, metrics_dir,
+                 hash_col=st.hash_col)
+    sources = {st.source for st in graph}
+    return spark.read.parquet(*[path[st.name] for st in graph if st.name not in sources])
 
 
 # ------------------------------------------------------------------ sinks

@@ -193,19 +193,31 @@ FROM node_feats f JOIN districts d
   ON abs(CAST(f.lon AS BIGINT) - d.cx) + abs(CAST(f.latp AS BIGINT) - d.cy) < {spatial.DIST_R}
 """
 
-def _dbf_record_count(path: str) -> int:
-    """Record count from a dBase III header (uint32 LE at offset 4) —
-    ties the J8 oracle's id enumeration to the COMMITTED fixture, so a
-    regenerated lines.dbf with a different line count cannot silently
-    diverge from the range the oracle walks."""
+_LINES_DBF = os.path.join(os.path.dirname(__file__), "data", "lines.dbf")
+
+
+def _fixture_line_count() -> int:
+    """Record count from the committed lines.dbf's dBase III header
+    (uint32 LE at offset 4) — ties the J8 oracle's id enumeration to the
+    COMMITTED fixture, so a regenerated lines.dbf with a different line
+    count cannot silently diverge from the range the oracle walks. Read
+    on first use of ORACLES, not at import, and a missing or truncated
+    file fails with its path named."""
     import struct
 
-    with open(path, "rb") as f:
-        return struct.unpack_from("<I", f.read(8), 4)[0]
+    path = _LINES_DBF
+    with open(path, "rb") as f:  # FileNotFoundError names the path
+        head = f.read(12)
+    if len(head) < 12:
+        raise ValueError(f"J8 oracle fixture truncated: {path} has a "
+                         f"{len(head)}-byte dBase header (need 12)")
+    n, hlen, rlen = struct.unpack_from("<IHH", head, 4)
+    if os.path.getsize(path) < hlen + n * rlen:
+        raise ValueError(f"J8 oracle fixture truncated: {path} is "
+                         f"{os.path.getsize(path)} bytes, its header declares "
+                         f"{n} records of {rlen} bytes after {hlen}")
+    return n
 
-
-_N_FIXTURE_LINES = _dbf_record_count(
-    os.path.join(os.path.dirname(__file__), "data", "lines.dbf"))
 
 # J8 oracle: regenerate the fixture polylines closed-form
 # (tests/test_shapefile.polyline_vertices, same lattice as the corpus
@@ -216,7 +228,7 @@ _N_FIXTURE_LINES = _dbf_record_count(
 _J8_LINES_SQL = f"""
 WITH hs AS (
   SELECT i, (i * 2654435761 + 40503) % 4294967296 AS h
-  FROM (SELECT unnest(range({_N_FIXTURE_LINES})) AS i)
+  FROM (SELECT unnest(range({{n_lines}})) AS i)
 ),
 base AS (
   SELECT i, h, CAST(4 + h % 9 AS INT) AS nv,
@@ -274,15 +286,12 @@ cand AS (
 )
 SELECT DISTINCT fid AS line_id, x, y FROM cand
 """
-_J8_LINES_SQL = _J8_LINES_SQL.format(
-    xf1=_XF.format(v="al"), yf1=_YF.format(v="ap"),
-    xf2=_XF.format(v="bl"), yf2=_YF.format(v="bp"))
 
-ORACLES = {
+_ORACLES = {
     "spatial_join_pip": _PIP_SQL,
     "spatial_join_pip_shp": _PIP_SQL,
     "spatial_join_pip_big": _PIP_SQL,
-    "j8_shp_line_cover": _J8_LINES_SQL,
+    "j8_shp_line_cover": None,  # filled from the fixture on first use
     "knn_places": GEOCODE_CTE + """
 , q AS (SELECT object_id, lon, latp FROM node_feats WHERE layer = 'poi'),
 p AS (SELECT object_id AS place_id, lon, latp FROM node_feats WHERE layer = 'place'),
@@ -343,3 +352,17 @@ SELECT f.object_id, f.layer,
 FROM way_feats f LEFT JOIN whits h USING (object_id, layer)
 """,
 }
+
+
+def __getattr__(name):
+    # ORACLES is built on first access (PEP 562): the J8 oracle reads
+    # lines.dbf, which must not be a precondition of importing QUERIES
+    if name != "ORACLES":
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    oracles = dict(_ORACLES)
+    oracles["j8_shp_line_cover"] = _J8_LINES_SQL.format(
+        xf1=_XF.format(v="al"), yf1=_YF.format(v="ap"),
+        xf2=_XF.format(v="bl"), yf2=_YF.format(v="bp"),
+        n_lines=_fixture_line_count())
+    globals()["ORACLES"] = oracles
+    return oracles

@@ -121,22 +121,24 @@ def is_small_input(df, input_bytes: int | None = None) -> bool:
     return input_bytes is not None and input_bytes < SMALL_INPUT_BYTES
 
 
-def python_stage_partitions(spark: SparkSession, multiplier: int = 8,
-                            input_df=None, input_bytes: int | None = None) -> int:
+def python_stage_partitions(spark: SparkSession, input_df=None,
+                            input_bytes: int | None = None) -> int:
     """Partition count for Python-CPU-heavy (mapInPandas) stages.
 
     AQE's coalescing is BYTE-based and blind to per-row Python CPU cost,
     so a Python-heavy stage left at `spark.sql.shuffle.partitions`
     granularity floors the stage wall at its largest task no matter how
-    many cores run it. Measured (scripts/profile_pyramid.py, 8 cores,
-    x64 input, 16 shuffle partitions): the MVT encode stage coalesced to
-    11 tasks with a 48.5 s max task inside a 139 s job — the "fixed
-    cost" of the round-2 scaling fit was really this coarse-partition
-    critical path, which grows with data and shrinks with nothing.
+    many cores run it. Measured (8 cores, x64 input, 16 shuffle
+    partitions): the MVT encode stage coalesced to 11 tasks with a
+    48.5 s max task inside a 139 s job — the "fixed cost" of the round-2
+    scaling fit was really this coarse-partition critical path, which
+    grows with data and shrinks with nothing. The traced benchmark run
+    (``perfbench/``, ``--trace 1``) reports each stage's task count,
+    max task and skew from the event log.
 
-    Explicit fine hash partitioning (cores x multiplier, never below the
-    session's shuffle partitions) bounds max-task at ~1/multiplier of a
-    core's share, so adding executors keeps helping; AQE is deliberately
+    Explicit fine hash partitioning (cores x 8, never below the
+    session's shuffle partitions) bounds max-task at ~1/8 of a core's
+    share, so adding executors keeps helping; AQE is deliberately
     bypassed (explicit numPartitions is not coalesced).
 
     Input-aware (VERDICT r3 #7): when the caller supplies the stage's
@@ -154,4 +156,4 @@ def python_stage_partitions(spark: SparkSession, multiplier: int = 8,
     if input_df is not None or input_bytes is not None:
         if is_small_input(input_df, input_bytes):
             return max(par, base)
-    return max(par * multiplier, base)
+    return max(par * 8, base)
