@@ -331,7 +331,7 @@ def test_stream_group_exchanges_pinned(spark, docs):
     tiles = encode_zoom(rolled, default_config())
     eplan = tiles._jdf.queryExecution().executedPlan().toString()
     # the encode exchange specifically must be pinned: match the
-    # (z, x, y, _out_layer) hash partitioning with REPARTITION_BY_NUM on
+    # (z, x, y) hash partitioning with REPARTITION_BY_NUM on
     # the same line, and forbid any unpinned by-column repartition
     # anywhere in the plan (either would reintroduce AQE group splits)
     assert re.search(r"REPARTITION_BY_NUM.*hashpartitioning\(z#\d+", eplan) or \
@@ -339,13 +339,28 @@ def test_stream_group_exchanges_pinned(spark, docs):
     assert "REPARTITION_BY_COL" not in eplan, eplan[:3000]
 
 
+def test_pyramid_plan_single_encode_pass(spark):
+    """The lazy pyramid builds each tile in the one encoder: the
+    tile-cover UDF runs once (no second branch re-derives the tile
+    coord set for a join), and no Python UDF runs above the MapInPandas
+    encoder (layer assembly, framing and gzip happen inside it)."""
+    from tilemaker_spark import pipeline
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    tiles = pipeline.pyramid_df(spark, docs)
+    plan = tiles._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython [cover(") == 1, plan[:3000]
+    assert "SortMergeJoin" not in plan, plan[:3000]
+    assert plan.count("MapInPandas") == 1, plan[:3000]
+    assert "ArrowEvalPython" not in plan[:plan.index("MapInPandas")], plan[:3000]
+
+
 def test_bounding_box_coord_parity(spark, docs):
     """F7 over the emitted COORD set: with a bounding_box whose edges
     sit exactly on z14 tile boundaries, encode_zoom must emit exactly
     the tiles whose scalar TileBbox STRICTLY overlaps the box (tiles
-    merely touching the edge are excluded), at every zoom — the
-    vectorized coord filter must match the per-group scalar float path
-    bit for bit."""
+    merely touching the edge are excluded), at every zoom — empty
+    tiles included, all by the scalar TileBbox float path."""
     from tilemaker_spark import pipeline, tileassign
     from tilemaker_spark import geocode
     from tilemaker_spark.config import default_config
@@ -572,7 +587,7 @@ def test_f8_zoom_filter_cuts_rows(spark):
     back, building only appears at z >= 13."""
     from tilemaker_spark import geocode, pipeline, tileassign
     from tilemaker_spark.config import default_config
-    from tilemaker_spark.encode import zoom_eligible
+    from tilemaker_spark.encode import zoom_range_predicate
     from tilemaker_spark.queries_core import F8_ZOOMS, load_docs
 
     docs = load_docs(spark, SF_DIR)
@@ -580,7 +595,7 @@ def test_f8_zoom_filter_cuts_rows(spark):
     feats = pipeline.build_features(nodes, ways, rels).localCheckpoint()
     assigned = tileassign.assign_base_tiles(feats, 14)
     rolled = tileassign.rollup_all_zooms(assigned, F8_ZOOMS, 14).localCheckpoint()
-    kept = zoom_eligible(rolled, default_config())
+    kept = rolled.where(zoom_range_predicate(default_config()))
     n_before, n_after = rolled.count(), kept.count()
     assert n_after < n_before, (n_before, n_after)
     by_z = {int(r["z"]): set(r["layers"])

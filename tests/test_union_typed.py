@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from tilemaker_spark.config import default_config
 from tilemaker_spark.encode import encode_zoom
-from tilemaker_spark.kernels import geompack, geomops, mercator as M, polyunion
+from tilemaker_spark.kernels import geompack, geomops, mercator as M, mvt, polyunion
 
 
 # --------------------------------------------------------- wire decoding
@@ -308,6 +308,31 @@ def _tile_xy():
     x = int(M.lon2tilex(np.float64(TILE_LON), TILE_Z))
     y = int(M.latp2tiley(np.float64(TILE_LATP), TILE_Z))
     return x, y
+
+
+def test_out_of_zoom_range_tile_written_empty(spark):
+    """A tile whose rows are all out of zoom range (F8) is still written
+    (the tile set comes from the index, src/tile_data.cpp:163-170): an
+    empty body, gzipped when compress is on, with zero counts."""
+    z = 10   # below the poi (12) and building (13) minzooms
+    x = int(M.lon2tilex(np.float64(TILE_LON), z))
+    y = int(M.latp2tiley(np.float64(TILE_LATP), z))
+    bb = M.TileBbox(x, y, z)
+    cx = int((bb.min_lon + bb.max_lon) / 2 * 1e7)
+    cy = int((bb.min_latp + bb.max_latp) / 2 * 1e7)
+    rows = [
+        (z, x, y, 1, "node", "poi", 1, {"class": "cafe"}, {}, {}, False, None, cx, cy),
+        (z, x, y, 2, "way", "building", 3, {}, {}, {}, False,
+         bytearray(_octagon_geom(cx, cy, 8000)), None, None),
+    ]
+    for compress in (True, False):
+        cfg = default_config()
+        cfg.compress = compress
+        (tile,) = encode_zoom(_assigned_df(spark, rows), cfg).collect()
+        assert (tile["z"], tile["x"], tile["y"]) == (z, x, y)
+        assert tile["feature_count"] == tile["geometry_hash"] == tile["raw_bytes"] == 0
+        empty = mvt.compress_tile(b"", use_gzip=cfg.gzip) if compress else b""
+        assert bytes(tile["tile"]) == empty
 
 
 def test_combine_unions_same_attr_polygons(spark):

@@ -1,20 +1,24 @@
-"""Per-tile MVT encode stage (A4/A5/A8, F8/F9, G5-G18, W3/W4).
+"""Per-tile MVT encode stage (A4/A5/A8, F7-F9, G5-G18, W3/W4).
 
 Streaming encoder: instead of groupBy().applyInPandas (one Python/Arrow
-round-trip per tile-layer group — measured ~2-4 ms of pure pandas
-machinery per group, the round-1 scale-killer), the plan is
+round-trip per group — measured ~2-4 ms of pure pandas machinery per
+group, the round-1 scale-killer), the plan is
 
-  repartition(n_parts, z, x, y, _out_layer) -- same shuffle as groupBy;
-                                               count PINNED (AQE-proof)
-  .sortWithinPartitions(group key + A4 key) -- JVM-side radix/Tim sort
-  .mapInPandas(stream encoder)              -- big Arrow batches
+  sentinelize_out_of_range                -- F8 as a projection: every
+                                             tile coord survives
+  .repartition(n_parts, z, x, y)          -- the one exchange; count
+                                             PINNED (AQE-proof)
+  .sortWithinPartitions(tile + A4 key)    -- JVM-side sort
+  .mapInPandas(stream encoder)            -- big Arrow batches
 
 so the Python side receives thousands of rows per batch and walks the
-contiguous (z, x, y, out_layer) runs with numpy; groups that straddle an
-Arrow batch boundary are carried into the next batch. Inside each group
-the reference tile-worker flow (src/tile_worker.cpp:102-254) runs:
+contiguous (z, x, y) runs with numpy; tiles that straddle an Arrow
+batch boundary are carried into the next batch. Each tile is built in
+one pass, following the reference tile worker
+(src/tile_worker.cpp:102-254):
 
-  sort/dedup (A4, src/tile_data.cpp:125-136 — sort done by Spark)
+  F7 bounding-box skip (no row for the tile)
+  -> sort/dedup (A4, src/tile_data.cpp:125-136 — sort done by Spark)
   -> per output-layer group in declaration order (W4)
   -> zoom-range filter (F8) + simplify tolerance (src/tile_worker.cpp:167-176)
   -> clip (G7-G9, src/output_object.cpp:25-74)
@@ -25,8 +29,9 @@ the reference tile-worker flow (src/tile_worker.cpp:102-254) runs:
   -> Douglas-Peucker (G10) -> 4096-grid scale (G6)
   -> MVT command stream (G16, vectorized delta/varint writers)
      + attr dictionaries (A8/G17)
-  -> protobuf framing; cross-layer W4 ordering + gzip (G18) assemble
-     in Catalyst.
+  -> protobuf framing of the non-empty layers, tile hash, gzip (G18);
+     a tile with no surviving feature is written with an empty body
+     (src/tile_data.cpp:163-170).
 
 Attribute values are typed (F6): string attrs in ``attrs``, numeric in
 ``attrs_num``, boolean in ``attrs_bool`` — emitted as the matching
@@ -46,13 +51,13 @@ from .config import Config
 from .kernels import clip as C, geomops, geompack, mercator as M, mvt, simplify as S
 from .streamgroups import stream_grouped
 
-LAYER_GROUP_SCHEMA = ("z int, x long, y long, order_idx int, layer_bytes binary, "
-                      "feature_count int, layer_hash long, raw_bytes int")
+TILE_SCHEMA = ("z int, x long, y long, tile binary, feature_count int, "
+               "geometry_hash long, raw_bytes int")
 
-_SORT_COLS = ["z", "x", "y", "_out_layer", "layer", "kind", "_ak", "elem", "object_id"]
+_SORT_COLS = ["z", "x", "y", "layer", "kind", "_ak", "elem", "object_id"]
 _NOT_PLAIN = object()   # sentinel: row not on the batched plain-point path
-_OUT_COLS = ["z", "x", "y", "order_idx", "layer_bytes", "feature_count",
-             "layer_hash", "raw_bytes"]
+_OUT_COLS = ["z", "x", "y", "tile", "feature_count", "geometry_hash", "raw_bytes"]
+_HASH_MOD = 1_000_000_007
 
 
 # The canonical A4 attribute key (`_ak`) is derived ONCE, by attrs_key
@@ -232,7 +237,7 @@ def _centroid_cmds(geom_buf, lonv, latpv, bb, box):
 
 def _gen_features(cols, sel, tol, bb, box, combine):
     """Walk one sorted row selection — all rows of one sub-layer within
-    a (tile, out_layer) group — and yield
+    one tile — and yield
     ``(ri, geom_type, cmds, geom_bytes_or_None)`` per output feature.
     Exact reference tile-worker flow (src/tile_worker.cpp:102-254):
     batched plain points, A5 combine runs, clip -> union -> simplify ->
@@ -354,7 +359,6 @@ def _cols_from_pdf(pdf: pd.DataFrame) -> dict:
         "z": pdf["z"].to_numpy(dtype=np.int64),
         "x": pdf["x"].to_numpy(dtype=np.int64),
         "y": pdf["y"].to_numpy(dtype=np.int64),
-        "ol": pdf["_out_layer"].to_numpy(dtype=object),
         "layer": pdf["layer"].to_numpy(dtype=object),
         "kind": pdf["kind"].to_numpy(dtype=np.int64),
         "ak": pdf["_ak"].to_numpy(dtype=object),
@@ -382,52 +386,26 @@ def _seg_starts(n: int, *arrays) -> np.ndarray:
 
 def make_stream_encoder(cfg: Config):
     """mapInPandas function: iterator of sorted Arrow batches ->
-    iterator of encoded (tile, output-layer) rows. cfg is tiny and ships
+    iterator of finished tile rows (TILE_SCHEMA). cfg is tiny and ships
     in the pickled closure."""
     layers_cfg = cfg.layers
-    group_index = {group[0]: (i, group) for i, group in enumerate(cfg.layer_order)}
+    layer_order = cfg.layer_order
     combine = cfg.combine_similar
     include_ids = cfg.include_ids
     bbox_cfg = cfg.bounding_box
     mvt_version = cfg.mvt_version
+    compress = cfg.compress
+    use_gzip = cfg.gzip
 
-    def _encode_run(cols, s, e, out_rows):
-        """Encode one (z, x, y, out_layer) run of rows [s:e)."""
-        z = int(cols["z"][s])
-        x = int(cols["x"][s])
-        y = int(cols["y"][s])
-        out_layer = cols["ol"][s]
-        if out_layer not in group_index:
-            return
-        bb = M.TileBbox(x, y, z)
-        if bbox_cfg is not None:
-            mnl, mnla, mxl, mxla = bbox_cfg
-            if mxl <= bb.min_lon or mnl >= bb.max_lon or \
-               mxla <= bb.min_lat or mnla >= bb.max_lat:
-                return  # F7
-        box = bb.clip_box
-        layer_a = cols["layer"]
-        kind_a = cols["kind"]
+    def _encode_layer(cols, by_layer, group, z, y, bb, box):
+        """One output layer (a W4 group of sub-layers) of one tile ->
+        (layer message, feature count, layer hash), or None when no
+        feature survives (F9: the layer is not written)."""
         ak_a = cols["ak"]
         attrs_a = cols["attrs"]
         anum_a = cols["anum"]
         abool_a = cols["abool"]
         oid_a = cols["oid"]
-        elem_a = cols["elem"]
-
-        # A4 dedup: rows arrive sorted by (layer, kind, _ak, elem,
-        # object_id); keep first of each adjacent-equal run. elem is part
-        # of the identity — way and relation id spaces overlap.
-        idx = np.arange(s, e)
-        if e - s > 1:
-            dup = ((layer_a[s + 1:e] == layer_a[s:e - 1])
-                   & (kind_a[s + 1:e] == kind_a[s:e - 1])
-                   & (ak_a[s + 1:e] == ak_a[s:e - 1])
-                   & (elem_a[s + 1:e] == elem_a[s:e - 1])
-                   & (oid_a[s + 1:e] == oid_a[s:e - 1]))
-            idx = idx[np.concatenate(([True], ~dup))]
-
-        order_idx, group = group_index[out_layer]
         dicts = mvt.LayerDicts()
         feats = []
         n_feats = 0
@@ -438,7 +416,7 @@ def make_stream_encoder(cfg: Config):
             nonlocal n_feats, ghash
             # A8/G17 tag indices are a pure function of the attrs (== the
             # canonical `_ak`) given the dictionary's first-occurrence
-            # registration, so they are cached per group under `_ak`
+            # registration, so they are cached per layer under `_ak`
             akv = ak_a[row_i]
             tag_idx = tag_cache.get(akv)
             if tag_idx is None:
@@ -471,42 +449,91 @@ def make_stream_encoder(cfg: Config):
         for sub in group:
             ld = layers_cfg[sub]
             if z < ld.minzoom or z > ld.maxzoom:
-                continue  # F8 (backstop; encode_zoom pre-filters)
-            sel = idx[layer_a[idx] == sub]
-            if len(sel) == 0:
+                # F8: out-of-range rows reach here only as sentinels
+                # (sentinelize_out_of_range), which keep the tile but
+                # contribute nothing to it
+                continue
+            sel = by_layer.get(sub)
+            if sel is None:
                 continue
             tol = ld.simplify_tolerance(z, y)
             for ri, gt, cmds, gbytes in _gen_features(cols, sel, tol, bb, box, combine):
                 emit(gt, cmds, ri, geom_bytes=gbytes)
 
         if not feats:
-            return  # F9
-        layer_msg = mvt.encode_layer(group[0], feats, dicts.keys, dicts.values,
-                                     version=mvt_version)
-        framed = mvt.encode_tile([layer_msg])
-        out_rows.append((z, x, y, order_idx, framed, n_feats,
-                         int(ghash), len(framed)))
+            return None
+        return (mvt.encode_layer(group[0], feats, dicts.keys, dicts.values,
+                                 version=mvt_version), n_feats, ghash)
+
+    def _encode_tile(cols, s, e, out_rows):
+        """Encode the tile whose rows are [s:e) into one output row."""
+        z = int(cols["z"][s])
+        x = int(cols["x"][s])
+        y = int(cols["y"][s])
+        bb = M.TileBbox(x, y, z)
+        if bbox_cfg is not None:
+            mnl, mnla, mxl, mxla = bbox_cfg
+            if mxl <= bb.min_lon or mnl >= bb.max_lon or \
+               mxla <= bb.min_lat or mnla >= bb.max_lat:
+                return  # F7: the tile is not written at all
+        layer_a = cols["layer"]
+        kind_a = cols["kind"]
+        ak_a = cols["ak"]
+        oid_a = cols["oid"]
+        elem_a = cols["elem"]
+
+        # A4 dedup: rows arrive sorted by (layer, kind, _ak, elem,
+        # object_id); keep first of each adjacent-equal run. elem is part
+        # of the identity — way and relation id spaces overlap.
+        idx = np.arange(s, e)
+        if e - s > 1:
+            dup = ((layer_a[s + 1:e] == layer_a[s:e - 1])
+                   & (kind_a[s + 1:e] == kind_a[s:e - 1])
+                   & (ak_a[s + 1:e] == ak_a[s:e - 1])
+                   & (elem_a[s + 1:e] == elem_a[s:e - 1])
+                   & (oid_a[s + 1:e] == oid_a[s:e - 1]))
+            idx = idx[np.concatenate(([True], ~dup))]
+        # the sub-layers are contiguous runs of the sorted rows
+        lay = layer_a[idx]
+        bounds = _seg_starts(len(idx), lay)
+        by_layer = {lay[a]: idx[a:b] for a, b in zip(bounds[:-1], bounds[1:])}
+
+        # W4: output layers in declaration order; the tile hash folds the
+        # non-empty layers' hashes in that order
+        box = bb.clip_box
+        msgs = []
+        n_feats = 0
+        thash = 0
+        for group in layer_order:
+            enc = _encode_layer(cols, by_layer, group, z, y, bb, box)
+            if enc is not None:
+                msgs.append(enc[0])
+                n_feats += enc[1]
+                thash = (thash * 31 + enc[2] % _HASH_MOD) % _HASH_MOD
+        # empty tiles are written too (src/tile_data.cpp:163-170)
+        raw = mvt.encode_tile(msgs)
+        tile = mvt.compress_tile(raw, use_gzip=use_gzip) if compress else raw
+        out_rows.append((z, x, y, tile, n_feats, thash, len(raw)))
 
     def _encode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         cols = _cols_from_pdf(pdf)
-        n = len(pdf)
-        starts = _seg_starts(n, cols["z"], cols["x"], cols["y"], cols["ol"])
+        starts = _seg_starts(len(pdf), cols["z"], cols["x"], cols["y"])
         out_rows: list = []
-        for si in range(len(starts) - 1):
-            _encode_run(cols, int(starts[si]), int(starts[si + 1]), out_rows)
+        for s, e in zip(starts[:-1], starts[1:]):
+            _encode_tile(cols, int(s), int(e), out_rows)
         return pd.DataFrame(out_rows, columns=_OUT_COLS)
 
-    # groups are contiguous (the partition is sorted by them); see the
+    # tiles are contiguous (the partition is sorted by them); see the
     # streamgroups module docstring for the batch-boundary carry contract
-    return stream_grouped(["z", "x", "y", "_out_layer"], _encode_batch)
+    return stream_grouped(["z", "x", "y"], _encode_batch)
 
 
 def zoom_range_predicate(cfg: Config):
     """F8 predicate as a Catalyst Column: row's z within its layer's
     [minzoom, maxzoom] (literal-map lookup; layer names always come
     from the same config, so the ANSI missing-key path never fires).
-    Shared by zoom_eligible (the encode-side filter) and the rollup's
-    sentinel pushdown (tileassign._sentinelize_out_of_range)."""
+    Used by sentinelize_out_of_range and by the f8_zoom_filter
+    query."""
     from pyspark.sql import functions as F
 
     minz = F.create_map(*[x for name, ld in cfg.layers.items()
@@ -517,47 +544,65 @@ def zoom_range_predicate(cfg: Config):
             & (F.col("z") <= F.element_at(maxz, F.col("layer"))))
 
 
-def zoom_eligible(assigned: DataFrame, cfg: Config) -> DataFrame:
-    """F8: per-layer zoom-range filter (reference: LayerDef minzoom /
-    maxzoom, src/tile_worker.cpp per-layer skip), pushed down BEFORE the
-    encode shuffle — a z0 tile would otherwise receive every feature in
-    the world as one group only to drop them after the exchange. Pure
-    Catalyst (literal map lookup), so it also prunes the rollup explode
-    output map-side. Driver-verified directly by the f8_zoom_filter
-    query/oracle pair."""
-    return assigned.where(zoom_range_predicate(cfg))
+def sentinelize_out_of_range(df: DataFrame, cfg: Config) -> DataFrame:
+    """F8 (LayerDef minzoom/maxzoom) as a projection, not a filter.
+
+    A row whose layer is out of zoom range contributes nothing to its
+    tile except the tile's existence: the reference still writes that
+    tile (the layer loop skips at write time, src/tile_worker.cpp:166;
+    the tile set comes from the index, src/tile_data.cpp:163-170). So
+    such a row is projected onto ONE sentinel identity per (tile,
+    layer) — object_id -1, kind 0, elem "", payload columns nulled —
+    instead of being dropped. The sentinels are what supply the
+    encoder's tile coord set: every tile of the input reaches the
+    encoder, which writes it (empty if nothing else survives), while
+    out-of-range geometry and attributes never cross an exchange. The
+    rollup applies it below its dedup exchange, where the map-side
+    partial aggregate collapses the sentinels (45% of rolled rows at
+    the default config are out of range, dominated by poi below z12);
+    encode_zoom applies it again, a no-op on rollup output. The layer
+    name stays real, so the encoder's per-layer zoom check drops the
+    sentinels and the ANSI map lookup is safe."""
+    from pyspark.sql import functions as F
+
+    elig = zoom_range_predicate(cfg)
+    keep = {"z", "x", "y", "layer"}
+    forced = {"object_id": F.lit(-1).cast("long"),
+              "kind": F.lit(0),
+              "elem": F.lit("")}
+    exprs = []
+    for c in df.columns:
+        if c in keep:
+            exprs.append(F.col(c))
+        elif c in forced:
+            exprs.append(F.when(elig, F.col(c)).otherwise(forced[c]).alias(c))
+        else:
+            # no otherwise -> typed NULL: geom/attr payloads of
+            # out-of-range rows never cross the exchange
+            exprs.append(F.when(elig, F.col(c)).alias(c))
+    return df.select(*exprs)
 
 
 def encode_zoom(assigned: DataFrame, cfg: Config) -> DataFrame:
-    """(z,x,y,...feature rows) -> (z,x,y,tile,...): streaming
-    per-(tile,output-layer) encode, then Catalyst tile assembly.
+    """(z, x, y, ...feature rows) -> one finished row per tile
+    (TILE_SCHEMA), in one exchange and one Python pass per tile.
 
-    Scale-critical shaping BEFORE the shuffle (all Catalyst):
-    - F8 zoom-range filter pushed down: a z0 tile would otherwise
-      receive every feature in the world as one group only to drop them
-      after the shuffle. Tile-set parity with the reference (which emits
-      empty tiles, src/tile_worker.cpp:229-250) is preserved by a
-      distinct-coords left join re-adding fully-filtered tiles with an
-      empty MVT body.
-    - the canonical typed attribute sort key (A4) is computed as a
-      Catalyst column so Python never re-derives it per row.
-    - partitioning is per-(tile, OUTPUT-layer) — the skew answer for
-      metro tiles: MVT layers are independent (A4 sort/dedup, A5 merge,
-      A8 dictionaries are all per-layer), so the hottest tile splits
-      across layer groups; W4 ordering + framing + gzip happen in the
-      Catalyst assembly below.
+    Catalyst shaping, all before the encoder:
+    - F8 as sentinelize_out_of_range: out-of-range rows keep only their
+      tile coord, so every tile of the input (empty ones included)
+      reaches the encoder while their payloads stay out of the shuffle;
+    - a pinned hash repartition on (z, x, y), so all rows of a tile
+      meet in one task;
+    - the canonical typed attribute key (A4) as a Catalyst column, so
+      Python never re-derives it per row.
+    The encoder then builds each tile whole, as the reference's tile
+    worker does (src/tile_worker.cpp:200-254): output layers in
+    declaration order (W4), framing, the tile hash, and gzip/deflate
+    (G18) when ``cfg.compress`` is set.
     """
-    from pyspark.sql import functions as F
-
-    has_num = "attrs_num" in assigned.columns
-    has_bool = "attrs_bool" in assigned.columns
-    ak = attrs_key(has_num, has_bool)
-    out_layer = F.create_map(*[x for name in cfg.layers
-                               for x in (F.lit(name), F.lit(cfg.output_layer_of(name)))])
-    eligible = (zoom_eligible(assigned, cfg)
-                .withColumn("_out_layer", F.element_at(out_layer, F.col("layer"))))
     from .session import python_stage_partitions
 
+    ak = attrs_key("attrs_num" in assigned.columns, "attrs_bool" in assigned.columns)
     n_parts = python_stage_partitions(assigned.sparkSession, input_df=assigned)
     # `_ak` (array transforms + sort + string joins over the attr maps)
     # is the most expensive Catalyst expression in the plan. Computing
@@ -566,102 +611,8 @@ def encode_zoom(assigned: DataFrame, cfg: Config) -> DataFrame:
     # (coalescing is blind to per-row CPU) — into the explicitly
     # fine-partitioned (cores×8) encode stage. It is not a partition
     # key, only a sort key, so placement above the repartition is free.
-    part = (eligible
-            .repartition(n_parts, F.col("z"), F.col("x"), F.col("y"), F.col("_out_layer"))
+    return (sentinelize_out_of_range(assigned, cfg)
+            .repartition(n_parts, "z", "x", "y")
             .withColumn("_ak", ak)
-            .sortWithinPartitions(*_SORT_COLS))
-    layer_groups = part.mapInPandas(make_stream_encoder(cfg),
-                                    schema=LAYER_GROUP_SCHEMA)
-
-    # ---- W4 tile assembly: order layers, concat framed bytes (Catalyst)
-    parts = (layer_groups.groupBy("z", "x", "y").agg(
-        F.sort_array(F.collect_list(F.struct("order_idx", "layer_bytes"))).alias("parts"),
-        F.sort_array(F.collect_list(F.struct("order_idx", "layer_hash"))).alias("hparts"),
-        F.sum("feature_count").cast("int").alias("feature_count"),
-        F.sum("raw_bytes").cast("int").alias("raw_bytes")))
-    raw_col = F.aggregate("parts", F.lit(b""),
-                          lambda acc, p: F.concat(acc, p["layer_bytes"]))
-    hash_col = F.aggregate(
-        "hparts", F.lit(0).cast("long"),
-        lambda acc, p: (acc * 31 + F.pmod(p["layer_hash"], F.lit(1000000007))) % F.lit(1000000007))
-    assembled = parts.select("z", "x", "y", raw_col.alias("raw"),
-                             hash_col.alias("geometry_hash"),
-                             "feature_count", "raw_bytes")
-
-    # gzip/deflate (G18) — vectorized scalar pandas UDF over tile bytes
-    if cfg.compress:
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import BinaryType
-
-        use_gzip = cfg.gzip
-
-        @pandas_udf(BinaryType())
-        def compress(raw):
-            return raw.apply(lambda b: mvt.compress_tile(bytes(b), use_gzip=use_gzip))
-
-        assembled = assembled.withColumn("tile", compress(F.col("raw")))
-    else:
-        assembled = assembled.withColumn("tile", F.col("raw"))
-    tiles = assembled.select("z", "x", "y", "tile", "feature_count",
-                             "geometry_hash", "raw_bytes")
-
-    # empty-tile parity: the tile COORD set derives from the index, not
-    # from post-filter contents (reference: tile_data.cpp:163-170)
-    empty_raw = mvt.encode_tile([])
-    empty_bytes = (mvt.compress_tile(empty_raw, use_gzip=cfg.gzip)
-                   if cfg.compress else empty_raw)
-    coords = assigned.select("z", "x", "y").distinct()
-    if cfg.bounding_box is not None:
-        # F7 for the coord set — same Python TileBbox float path as the
-        # per-group skip (a Catalyst re-derivation risked last-ULP
-        # disagreement for tiles exactly on the bbox edge): precompute
-        # the allowed integer tile range per zoom driver-side.
-        mnl, mnla, mxl, mxla = cfg.bounding_box
-        allowed = []
-        for zz in range(cfg.minzoom, cfg.maxzoom + 1):
-            xlo = int(M.lon2tilex(np.float64(mnl), zz))
-            xhi = int(M.lon2tilex(np.float64(mxl), zz))
-            ylo = int(M.lat2tileyf(np.float64(mxla), zz))
-            yhi = int(M.lat2tileyf(np.float64(mnla), zz))
-            allowed.append((zz, xlo, xhi, ylo, yhi))
-        cond = None
-        for zz, xlo, xhi, ylo, yhi in allowed:
-            # integer PREFILTER, widened by one tile each side: if a
-            # bbox edge sits within a float ULP of a tile boundary,
-            # lon2tilex/lat2tileyf here could round one tile tighter
-            # than the exact TileBbox floats the per-group encoder and
-            # the `overlaps` UDF below agree on — a strict range would
-            # then drop an encoded tile from the coord set entirely.
-            # The ±1 slack keeps this a superset; `overlaps` is the
-            # exact test.
-            c = ((F.col("z") == zz)
-                 & (F.col("x") >= xlo - 1) & (F.col("x") <= xhi + 1)
-                 & (F.col("y") >= ylo - 1) & (F.col("y") <= yhi + 1))
-            cond = c if cond is None else (cond | c)
-        # tiles whose shared edge only touches the bbox are excluded by
-        # the per-group encoder; mirror with the exact TileBbox floats
-        from pyspark.sql.types import BooleanType
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf(BooleanType())
-        def overlaps(z_s: pd.Series, x_s: pd.Series, y_s: pd.Series) -> pd.Series:
-            # vectorized TileBbox edges — np.ldexp/arctan elementwise ops
-            # are the exact float path the scalar TileBbox takes
-            z = z_s.to_numpy(dtype=np.int64)
-            x = x_s.to_numpy(dtype=np.float64)
-            y = y_s.to_numpy(dtype=np.float64)
-            min_lon = np.ldexp(x, -z) * 360.0 - 180.0
-            max_lon = np.ldexp(x + 1.0, -z) * 360.0 - 180.0
-            max_lat = M.latp2lat(180.0 - np.ldexp(y, -z) * 360.0)
-            min_lat = M.latp2lat(180.0 - np.ldexp(y + 1.0, -z) * 360.0)
-            keep = ~((mxl <= min_lon) | (mnl >= max_lon)
-                     | (mxla <= min_lat) | (mnla >= max_lat))
-            return pd.Series(keep)
-
-        coords = coords.where(cond).where(overlaps("z", "x", "y"))
-    return (coords.join(tiles, ["z", "x", "y"], "left")
-            .select("z", "x", "y",
-                    F.coalesce(F.col("tile"), F.lit(empty_bytes)).alias("tile"),
-                    F.coalesce(F.col("feature_count"), F.lit(0)).alias("feature_count"),
-                    F.coalesce(F.col("geometry_hash"), F.lit(0).cast("long")).alias("geometry_hash"),
-                    F.coalesce(F.col("raw_bytes"), F.lit(0)).alias("raw_bytes")))
+            .sortWithinPartitions(*_SORT_COLS)
+            .mapInPandas(make_stream_encoder(cfg), schema=TILE_SCHEMA))

@@ -303,8 +303,8 @@ def q_pyramid_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lon2tilex/lat2tileyf floors and the oracle's DuckDB re-derivation
 # (same op order; libm last-ULP differences are 11 orders of magnitude
 # below the margin) agree exactly; no tile edge coincides with the
-# bbox, so the touch-exclusion path (encode.py overlaps UDF) equals
-# the integer-range test.
+# bbox, so the encoder's exact TileBbox touch-exclusion equals the
+# integer-range test.
 PYRAMID_BBOX = [9.9, 47.39, 10.6, 47.93]   # [minlon, minlat, maxlon, maxlat]
 
 
@@ -313,9 +313,9 @@ def q_pyramid_bbox(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounding-box clip + src/tile_worker.cpp:229-250 empty-tile parity):
     the full pyramid_tiles pipeline run THROUGH encode_zoom with a
     config bounding_box — the returned tile coords are the encoder's
-    F7-filtered output set (both the per-zoom integer-range skip and
-    the exact TileBbox touch-exclusion UDF), joined back to the rollup
-    index for per-tile feature counts the oracle re-derives in SQL."""
+    F7-filtered output set (its per-tile TileBbox overlap test),
+    joined back to the rollup index for per-tile feature counts the
+    oracle re-derives in SQL."""
     from . import pipeline, tileassign
     from .config import default_config
     from .encode import encode_zoom
@@ -342,20 +342,20 @@ def q_f8_zoom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     minzoom/maxzoom): the rolled pyramid at zooms spanning every layer
     threshold (place 4, transportation/waterway 8, landcover/water 6,
     poi 12, building 13) run through the EXACT production filter
-    expression (encode.zoom_eligible — the same literal-map predicate
-    encode_zoom pushes below its shuffle), counted per (z, layer). The
-    oracle re-derives the rolled pyramid in SQL (the proven
-    pyramid_tiles CTEs at the wider zoom list) and applies the zoom
-    ranges from the same default_config()."""
+    expression (encode.zoom_range_predicate — the literal-map predicate
+    encode_zoom's sentinel projection uses below its shuffle), counted
+    per (z, layer). The oracle re-derives the rolled pyramid in SQL (the
+    proven pyramid_tiles CTEs at the wider zoom list) and applies the
+    zoom ranges from the same default_config()."""
     from . import pipeline, tileassign
-    from .encode import zoom_eligible
+    from .encode import zoom_range_predicate
 
     docs = load_docs(spark, sf_dir)
     nodes, ways, rels = geocode.geocode(docs)
     feats = pipeline.build_features(nodes, ways, rels).localCheckpoint()
     assigned = tileassign.assign_base_tiles(feats, 14)
     rolled = tileassign.rollup_all_zooms(assigned, F8_ZOOMS, 14)
-    return (zoom_eligible(rolled, default_config())
+    return (rolled.where(zoom_range_predicate(default_config()))
             .groupBy("z", "layer")
             .agg(F.count(F.lit(1)).alias("n_rows")))
 

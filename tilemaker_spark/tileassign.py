@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+from .encode import attrs_key, sentinelize_out_of_range
 from .kernels import geompack, tilecover
 
 
@@ -160,45 +161,9 @@ def rollup_to_zoom(base_assigned: DataFrame, zoom: int, base_zoom: int = 14,
     if "feat_minzoom" in df.columns:
         df = df.where(F.col("feat_minzoom") <= zoom)
     if cfg is not None:
-        df = _sentinelize_out_of_range(df, cfg)
+        df = sentinelize_out_of_range(df, cfg)
     df, keys = _dedup_identity(df)
     return df.dropDuplicates(keys).drop("_akd")
-
-
-def _sentinelize_out_of_range(df: DataFrame, cfg) -> DataFrame:
-    """F8 pushdown BELOW the rollup dedup exchange, without breaking
-    empty-tile parity. A rolled row whose layer is out of zoom range
-    contributes nothing downstream except its tile COORD: the reference
-    still writes that tile (the layer loop skips at write time,
-    src/tile_worker.cpp:166; the tile set comes from the index,
-    src/tile_data.cpp:163-170), and encode_zoom mirrors that by taking
-    the coord universe from pre-filter rows. So out-of-range rows are
-    projected onto ONE sentinel identity per (tile, layer) — object_id
-    -1, payload columns nulled — and the dedup's map-side partial
-    aggregate collapses them before the exchange (45% of rolled rows at
-    the default config are out-of-range, dominated by poi below z12).
-    Downstream is untouched: encode_zoom's zoom filter drops the
-    sentinels exactly as it dropped the originals (the layer name stays
-    real, so the ANSI map lookup is safe), after the coord universe has
-    been taken."""
-    from .encode import zoom_range_predicate
-
-    elig = zoom_range_predicate(cfg)
-    keep = {"z", "x", "y", "layer"}
-    forced = {"object_id": F.lit(-1).cast("long"),
-              "kind": F.lit(0),
-              "elem": F.lit("")}
-    exprs = []
-    for c in df.columns:
-        if c in keep:
-            exprs.append(F.col(c))
-        elif c in forced:
-            exprs.append(F.when(elig, F.col(c)).otherwise(forced[c]).alias(c))
-        else:
-            # no otherwise -> typed NULL: geom/attr payloads of
-            # out-of-range rows never cross the exchange
-            exprs.append(F.when(elig, F.col(c)).alias(c))
-    return df.select(*exprs)
 
 
 def rollup_all_zooms(base_assigned: DataFrame, zooms: list, base_zoom: int = 14,
@@ -213,7 +178,8 @@ def rollup_all_zooms(base_assigned: DataFrame, zooms: list, base_zoom: int = 14,
     partition instead of 10^4 shuffled rows; this is what makes the
     low-zoom levels survive a 100× scale-up. (The reference re-derives
     each zoom from the base index too: src/tile_data.cpp:8-55, but
-    serially per zoom.)
+    serially per zoom.) ``cfg`` projects out-of-zoom-range rows onto
+    sentinels (encode.sentinelize_out_of_range) below that exchange.
     """
     zoom_arr = F.array(*[F.lit(int(z)) for z in zooms])
     df = (base_assigned
@@ -226,7 +192,7 @@ def rollup_all_zooms(base_assigned: DataFrame, zooms: list, base_zoom: int = 14,
         # this bounds low-zoom group sizes independent of input scale
         df = df.where(F.col("feat_minzoom") <= F.col("z"))
     if cfg is not None:
-        df = _sentinelize_out_of_range(df, cfg)
+        df = sentinelize_out_of_range(df, cfg)
     df, keys = _dedup_identity(df)
     return df.dropDuplicates(keys).drop("_akd")
 
@@ -239,8 +205,6 @@ def _dedup_identity(df: DataFrame):
     attrs must be part of the key. Spark cannot dedup on MapType;
     encode.attrs_key renders the maps to the canonical injective string
     the encoder also sorts/dedups by (A4)."""
-    from .encode import attrs_key
-
     keys = ["z", "x", "y", "layer", "kind", "elem", "object_id"]
     if "attrs" in df.columns:
         df = df.withColumn("_akd", attrs_key("attrs_num" in df.columns,
